@@ -1,6 +1,6 @@
 package graft.domain
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Grid.GridSpec
 import graft.operators.Sessionize
@@ -101,6 +101,24 @@ object GlobalPipeline {
       }
     }.getOrElse(default)
 
+  /** Mesh-cell centres `lon`/`lat` of the `lon_idx`/`lat_idx` columns —
+    * the global linspace formula, one expression for every caller so the
+    * centres stay bit-identical across the mask, the covered extent and
+    * the output. */
+  private def withMeshCentres(g: GridSpec)(df: DataFrame): DataFrame =
+    df.withColumn("lon", lit(g.minX) + col("lon_idx") * ((lit(g.maxX) - lit(g.minX)) / (lit(g.nX) - lit(1))))
+      .withColumn("lat", lit(g.minY) + col("lat_idx") * ((lit(g.maxY) - lit(g.minY)) / (lit(g.nY) - lit(1))))
+
+  /** The oversized-region guard's error (a `raise_error` column): names the
+    * region, its `area` in grid cells and the ceiling `maxPx`. */
+  private def oversizeError(area: Column, maxPx: Long): Column =
+    raise_error(concat(
+      lit("coveredPixels: region "), col("region_id").cast("string"),
+      lit(" covers "), area.cast("string"),
+      lit(s" grid cells (> $MaxRegionPixelsConfKey=$maxPx); a region this size "),
+      lit("concentrates a dense band in one interpolation task. Check the "),
+      lit("granule's session keys (operation mode / target) or raise the conf.")))
+
   /** Global pixels covered by each region's extent: per-region explode of
     * the covered global index ranges; coordinates via the global linspace
     * formula (no global mesh materialization).
@@ -121,15 +139,7 @@ object GlobalPipeline {
     val maxPx = longConf(extents.sparkSession, MaxRegionPixelsConfKey, DefaultMaxRegionPixels)
     val area = (col("_xhi") - col("_xlo") + 1).cast("long") *
       (col("_yhi") - col("_ylo") + 1).cast("long")
-    val guardedXlo = when(
-      area > maxPx,
-      raise_error(concat(
-        lit("coveredPixels: region "), col("region_id").cast("string"),
-        lit(" covers "), area.cast("string"),
-        lit(s" grid cells (> $MaxRegionPixelsConfKey=$maxPx); a region this size "),
-        lit("concentrates a dense band in one interpolation task. Check the "),
-        lit("granule's session keys (operation mode / target) or raise the conf.")))
-        .cast("int"))
+    val guardedXlo = when(area > maxPx, oversizeError(area, maxPx).cast("int"))
       .otherwise(col("_xlo"))
     extents
       .withColumn("_xlo", greatest(lit(0), ceil((col("fminx") - g.minX) / stepX).cast("int")))
@@ -139,8 +149,7 @@ object GlobalPipeline {
       .filter(col("_xlo") <= col("_xhi") && col("_ylo") <= col("_yhi"))
       .withColumn("lon_idx", explode(sequence(guardedXlo, col("_xhi"))))
       .withColumn("lat_idx", explode(sequence(col("_ylo"), col("_yhi"))))
-      .withColumn("lon", lit(g.minX) + col("lon_idx") * ((lit(g.maxX) - lit(g.minX)) / (lit(g.nX) - lit(1))))
-      .withColumn("lat", lit(g.minY) + col("lat_idx") * ((lit(g.maxY) - lit(g.minY)) / (lit(g.nY) - lit(1))))
+      .transform(withMeshCentres(g))
       .drop("_xlo", "_xhi", "_ylo", "_yhi", "fminx", "fmaxx", "fminy", "fmaxy")
   }
 
@@ -186,16 +195,7 @@ object GlobalPipeline {
       (col("_yhi") - col("_ylo") + 1).cast("long")
     val nTiles =
       if (mode == "fail")
-        when(
-          area > maxPx,
-          raise_error(concat(
-            lit("coveredPixels: region "), col("region_id").cast("string"),
-            lit(" covers "), area.cast("string"),
-            lit(s" grid cells (> $MaxRegionPixelsConfKey=$maxPx); a region this size "),
-            lit("concentrates a dense band in one interpolation task. Check the "),
-            lit("granule's session keys (operation mode / target) or raise the conf.")))
-            .cast("long"))
-          .otherwise(lit(1L))
+        when(area > maxPx, oversizeError(area, maxPx).cast("long")).otherwise(lit(1L))
       // Column./ is double division; areas ≤ nX·nY ≤ ~6.5·10⁸ are exact in
       // a double, so floor-of-quotient is the exact integer ceil-div.
       // Capped at the strip count (latitude rows): strips are full-width,
@@ -239,8 +239,7 @@ object GlobalPipeline {
       .select(col("rkey"), col("_xlo"), col("_xhi"), col("_tylo"), col("_tyhi"))
       .withColumn("lon_idx", explode(sequence(col("_xlo"), col("_xhi"))))
       .withColumn("lat_idx", explode(sequence(col("_tylo"), col("_tyhi"))))
-      .withColumn("lon", lit(g.minX) + col("lon_idx") * ((lit(g.maxX) - lit(g.minX)) / (lit(g.nX) - lit(1))))
-      .withColumn("lat", lit(g.minY) + col("lat_idx") * ((lit(g.maxY) - lit(g.minY)) / (lit(g.nY) - lit(1))))
+      .transform(withMeshCentres(g))
       .drop("_xlo", "_xhi", "_tylo", "_tyhi")
 
   /** Footprint mask on the GLOBAL lattice (M1+M2), footprint-driven.
@@ -280,22 +279,13 @@ object GlobalPipeline {
       g: GridSpec,
       cfg: Pipeline.Config,
       clipTo: Option[DataFrame] = None): DataFrame = {
-    val s     = math.min(math.max(cfg.maskScale, 1.0), 1.5)
     val stepX = (g.maxX - g.minX) / (g.nX - 1)
     val stepY = (g.maxY - g.minY) / (g.nY - 1)
     val candidates = soundings.select(
       col("region_id"),
       col("vertex_longitude").cast("array<double>").as("vxs"),
       col("vertex_latitude").cast("array<double>").as("vys"))
-      // centroid-affine scaling of the ring (same arithmetic as maskPixels)
-      .withColumn("cx", aggregate(col("vxs"), lit(0.0), (a, v) => a + v) / size(col("vxs")))
-      .withColumn("cy", aggregate(col("vys"), lit(0.0), (a, v) => a + v) / size(col("vys")))
-      .withColumn("sxs", transform(col("vxs"), v => col("cx") + (v - col("cx")) * lit(s)))
-      .withColumn("sys", transform(col("vys"), v => col("cy") + (v - col("cy")) * lit(s)))
-      .withColumn("fminx", array_min(col("sxs")))
-      .withColumn("fmaxx", array_max(col("sxs")))
-      .withColumn("fminy", array_min(col("sys")))
-      .withColumn("fmaxy", array_max(col("sys")))
+      .transform(Pipeline.scaledFootprints(cfg))
       .withColumn("_xlo", greatest(lit(0), ceil((col("fminx") - g.minX) / stepX).cast("int") - 1))
       .withColumn("_xhi", least(lit(g.nX - 1), floor((col("fmaxx") - g.minX) / stepX).cast("int") + 1))
       .withColumn("_ylo", greatest(lit(0), ceil((col("fminy") - g.minY) / stepY).cast("int") - 1))
@@ -303,8 +293,7 @@ object GlobalPipeline {
       .filter(col("_xlo") <= col("_xhi") && col("_ylo") <= col("_yhi"))
       .withColumn("lon_idx", explode(sequence(col("_xlo"), col("_xhi"))))
       .withColumn("lat_idx", explode(sequence(col("_ylo"), col("_yhi"))))
-      .withColumn("lon", lit(g.minX) + col("lon_idx") * ((lit(g.maxX) - lit(g.minX)) / (lit(g.nX) - lit(1))))
-      .withColumn("lat", lit(g.minY) + col("lat_idx") * ((lit(g.maxY) - lit(g.minY)) / (lit(g.nY) - lit(1))))
+      .transform(withMeshCentres(g))
       // the ORIGINAL prefilter, verbatim — the widened index range is a
       // superset, this keeps the kept-pixel set bit-identical
       .filter(
@@ -337,15 +326,7 @@ object GlobalPipeline {
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty"),
       quality: (DataFrame, Pipeline.Config) => DataFrame = Pipeline.qualityFilter): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sessionized =
-      if (granule.columns.contains("granule_path"))
-        sessionizePerGranule(granule, cfg, "granule_path")
-      else sessionize(granule, cfg)
-    val sessions0 = quality(sessionized, cfg)
-    val sessions =
-      if (cfg.persistSessions)
-        graft.CacheScope.persist(sessions0, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sessions0
+    val sessions = Pipeline.qualitySessions(granule, cfg, sessionize, quality(_, cfg))
     val extents  = regionExtent(sessions)
     // slim pixel payload: per-region constants (time/mode/target) stay in
     // the bounded region-level table and re-attach AFTER the mask join —
@@ -374,8 +355,7 @@ object GlobalPipeline {
       sessions, grid, cfg,
       clipTo = Some(tiles.select(
         col("region_id"), col("rkey"), col("_xlo"), col("_xhi"), col("_tylo"), col("_tyhi"))))
-      .withColumn("lon", lit(grid.minX) + col("lon_idx") * ((lit(grid.maxX) - lit(grid.minX)) / (lit(grid.nX) - lit(1))))
-      .withColumn("lat", lit(grid.minY) + col("lat_idx") * ((lit(grid.maxY) - lit(grid.minY)) / (lit(grid.nY) - lit(1))))
+      .transform(withMeshCentres(grid))
     // cogroup kernel, not the rank-1-window join: the join form materializes
     // |pixels|×|soundings| per region and OOMs at ~1M soundings — the global
     // mesh (18000×36000 in production) is exactly where that bites.
@@ -387,9 +367,7 @@ object GlobalPipeline {
     // band day, which is why it ran 9.5× the normal day instead of ~2×).
     val spark = granule.sparkSession
     import spark.implicits._
-    val kernels = graft.operators.LinearInterp.buildKernels(
-      sessions, valueCols,
-      if (cfg.method == "nearest_join") "nearest" else cfg.method)
+    val kernels = graft.operators.LinearInterp.buildKernels(sessions, valueCols, cfg.method)
     val kernelsK = kernels.toDF()
       .join(broadcast(keymap), Seq("region_id"))
       .drop("region_id")

@@ -80,15 +80,7 @@ object Oco2Pipeline {
       catalog: DataFrame,
       cfg: Pipeline.Config = Pipeline.Config(),
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty")): DataFrame = {
-    val sessionized =
-      if (granule.columns.contains("granule_path"))
-        sessionizePerGranule(granule, cfg, "granule_path")
-      else sessionize(granule, cfg)
-    val sessions0 = Pipeline.qualityFilter(sessionized, cfg)
-    val sessions =
-      if (cfg.persistSessions)
-        graft.CacheScope.persist(sessions0, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sessions0
+    val sessions = Pipeline.qualitySessions(granule, cfg, sessionize, Pipeline.qualityFilter(_, cfg))
     val regions  = associateByCentroid(regionGeo(sessions), catalog)
       .select("region_id", "target_id", "time", "min_lon", "min_lat", "max_lon", "max_lat")
     val sessionsWithTarget = sessions

@@ -3,7 +3,8 @@ package graft.domain
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Sessionize
+import org.apache.spark.storage.StorageLevel
+import graft.operators.{LinearInterp, Sessionize}
 import graft.functions.PointInPolygon
 
 /** The end-to-end observation pipeline (SURVEY §3.1 / §7.2 step 5):
@@ -21,10 +22,11 @@ import graft.functions.PointInPolygon
   * polygon test with scaling (:234-295).
   *
   * Scale design: everything is keyed by `region_id` — the sessionization
-  * windows partition by granule, the interpolation join shuffles soundings
-  * and pixels on region only (a region is one SAM capture, O(10³) rows), and
-  * the catalog is broadcast. Nothing materializes a dense global grid in
-  * flight; output is sparse long form (SURVEY §7.1).
+  * windows partition by granule, the interpolation shuffles soundings (into
+  * one kernel row per region) and pixels on region only (a region is one
+  * SAM capture, O(10³) rows), and the catalog is broadcast. Nothing
+  * materializes a dense global grid in flight; output is sparse long form
+  * (SURVEY §7.1).
   */
 object Pipeline {
 
@@ -35,18 +37,14 @@ object Pipeline {
       gridN: Int = 8,
       qfFilter: Boolean = true,
       maskScale: Double = 1.0,
-      /** "nearest" (rank-1 join), "linear" (Delaunay/barycentric grouped
-        * kernel with <4-point nearest fallback — the reference's deploy
-        * default), or "cubic" (Bézier-triangle Hermite over the same
-        * triangulation — the reference's code default). */
-      method: String = "nearest",
-      /** Persist the sessionized table across its three consumers (region
-        * summary / interpolation / mask). Routed through
-        * [[graft.CacheScope.persist]]: batch callers get session-lifetime
-        * caches; long-lived loops bracket each batch in
-        * `CacheScope.withScope` (as `MicroBatchIngest.ingestQueue` does)
-        * so the cache footprint stays flat across micro-batches. */
-      persistSessions: Boolean = true)
+      /** Interpolation method of the region kernel
+        * ([[graft.operators.LinearInterp.buildKernels]], which rejects any
+        * other value): "nearest" (exact argmin, ties to the lowest
+        * sounding_index), "linear" (Delaunay/barycentric with <4-point
+        * nearest fallback — the reference's deploy default), or "cubic"
+        * (Bézier-triangle Hermite over the same triangulation — the
+        * reference's code default). */
+      method: String = "nearest")
 
   /** R1/R2 + P4/P6: mode-filtered, margin-merged region detection over the
     * ordered sounding table. Adds `region_id`. */
@@ -102,8 +100,10 @@ object Pipeline {
         col("min_lat") + col("lat_idx") * ((col("max_lat") - col("min_lat")) / (lit(n) - lit(1))))
   }
 
-  /** G3 (nearest): per-region rank-1 nearest sounding per pixel. The join is
-    * keyed by region_id; the window partitions by (region, pixel). */
+  /** G3 (nearest) as a rank-1 window join: per-region nearest sounding per
+    * pixel, ties to the lowest sounding_index. Kept only as the independent
+    * reference the specs compare the kernel path against — it materializes
+    * |pixels|×|soundings| rows per region, so no pipeline runs it. */
   def interpolateNearest(pixels: DataFrame, soundings: DataFrame, valueCols: Seq[String]): DataFrame = {
     val pts = soundings.select(
       (col("region_id").as("_rid") +: col("longitude").as("px") +: col("latitude").as("py") +:
@@ -123,18 +123,14 @@ object Pipeline {
       .drop("_rn", "_rid", "_sidx", "px", "py", "d2")
   }
 
-  /** G4 + M1 + M2: footprint mask. Footprints are the soundings' 4-vertex
-    * rings, optionally centroid-scaled by `maskScale` clamped to [1, 1.5]
-    * (`OCO3SamProcessor.py:234-249`). Phase 1 prunes by footprint bbox
-    * (range predicates); phase 2 ray-casts the pixel center against the
-    * scaled ring. Returns the distinct masked pixel keys. */
-  def maskPixels(pixels: DataFrame, soundings: DataFrame, cfg: Config): DataFrame = {
+  /** Centroid-affine footprint scaling (`OCO3SamProcessor.py:234-249`),
+    * shared by every footprint mask: adds the ring centroid `cx/cy`, the
+    * rings `sxs/sys` scaled by `maskScale` clamped to [1, 1.5], and their
+    * bbox `fminx/fmaxx/fminy/fmaxy` to a frame carrying the raw rings
+    * `vxs/vys` (array<double>). */
+  private[domain] def scaledFootprints(cfg: Config)(rings: DataFrame): DataFrame = {
     val s = math.min(math.max(cfg.maskScale, 1.0), 1.5)
-    val fp = soundings.select(
-      col("region_id").as("_rid"),
-      col("vertex_longitude").cast("array<double>").as("vxs"),
-      col("vertex_latitude").cast("array<double>").as("vys"))
-      // centroid-affine scaling of the ring
+    rings
       .withColumn("cx", aggregate(col("vxs"), lit(0.0), (a, v) => a + v) / size(col("vxs")))
       .withColumn("cy", aggregate(col("vys"), lit(0.0), (a, v) => a + v) / size(col("vys")))
       .withColumn("sxs", transform(col("vxs"), v => col("cx") + (v - col("cx")) * lit(s)))
@@ -143,6 +139,24 @@ object Pipeline {
       .withColumn("fmaxx", array_max(col("sxs")))
       .withColumn("fminy", array_min(col("sys")))
       .withColumn("fmaxy", array_max(col("sys")))
+  }
+
+  /** G4 + M1 + M2: footprint mask. Footprints are the soundings' 4-vertex
+    * rings, optionally centroid-scaled by `maskScale` clamped to [1, 1.5]
+    * (`OCO3SamProcessor.py:234-249`). Phase 1 prunes by footprint bbox
+    * (range predicates); phase 2 ray-casts the pixel center against the
+    * scaled ring. Returns the distinct masked pixel keys.
+    *
+    * Kept only as the reference the specs compare the footprint-driven
+    * masks against ([[maskPixelsOnRegionGrid]],
+    * `GlobalPipeline.maskPixelsGlobal`): it joins every pixel of a region
+    * with every footprint, so no pipeline runs it. */
+  def maskPixels(pixels: DataFrame, soundings: DataFrame, cfg: Config): DataFrame = {
+    val fp = soundings.select(
+      col("region_id").as("_rid"),
+      col("vertex_longitude").cast("array<double>").as("vxs"),
+      col("vertex_latitude").cast("array<double>").as("vys"))
+      .transform(scaledFootprints(cfg))
       .select("_rid", "sxs", "sys", "fminx", "fmaxx", "fminy", "fmaxy")
     pixels
       .join(fp, pixels("region_id") === fp("_rid") &&
@@ -168,7 +182,6 @@ object Pipeline {
       sessions: DataFrame,
       regionsWithBbox: DataFrame,
       cfg: Config): DataFrame = {
-    val s = math.min(math.max(cfg.maskScale, 1.0), 1.5)
     val n = cfg.gridN
     val stepX = (col("max_lon") - col("min_lon")) / (lit(n) - lit(1))
     val stepY = (col("max_lat") - col("min_lat")) / (lit(n) - lit(1))
@@ -181,14 +194,7 @@ object Pipeline {
         broadcast(regionsWithBbox.select(
           col("region_id"), col("min_lon"), col("max_lon"), col("min_lat"), col("max_lat"))),
         Seq("region_id"))
-      .withColumn("cx", aggregate(col("vxs"), lit(0.0), (a, v) => a + v) / size(col("vxs")))
-      .withColumn("cy", aggregate(col("vys"), lit(0.0), (a, v) => a + v) / size(col("vys")))
-      .withColumn("sxs", transform(col("vxs"), v => col("cx") + (v - col("cx")) * lit(s)))
-      .withColumn("sys", transform(col("vys"), v => col("cy") + (v - col("cy")) * lit(s)))
-      .withColumn("fminx", array_min(col("sxs")))
-      .withColumn("fmaxx", array_max(col("sxs")))
-      .withColumn("fminy", array_min(col("sys")))
-      .withColumn("fmaxy", array_max(col("sys")))
+      .transform(scaledFootprints(cfg))
       .withColumn("_xlo", greatest(lit(0), ceil((col("fminx") - col("min_lon")) / stepX).cast("int") - 1))
       .withColumn("_xhi", least(lit(n - 1), floor((col("fmaxx") - col("min_lon")) / stepX).cast("int") + 1))
       .withColumn("_ylo", greatest(lit(0), ceil((col("fminy") - col("min_lat")) / stepY).cast("int") - 1))
@@ -230,15 +236,8 @@ object Pipeline {
     // ride the per-pixel explode — they re-attach at the end from the
     // region-level table, which is bounded by region count, not pixels
     val pixels = maskPixelsOnRegionGrid(sessions, regionsWithBbox, cfg)
-    val interped0 = cfg.method match {
-      case m @ ("nearest" | "linear" | "cubic") =>
-        graft.operators.LinearInterp.interpolate(pixels, sessions, valueCols, m)
-      // legacy join-based nearest (rank-1 window over pixels×soundings);
-      // only for small regions — the kernel form above is the scale path
-      case "nearest_join" => interpolateNearest(pixels, sessions, valueCols)
-      case other          => throw new IllegalArgumentException(s"unknown method: $other")
-    }
-    val interped = interped0.select(
+    val kernels = LinearInterp.buildKernels(sessions, valueCols, cfg.method)
+    val interped = LinearInterp.interpolateKernels(pixels, kernels, valueCols).select(
       (Seq("region_id", "lon_idx", "lat_idx", "lon", "lat") ++ valueCols).map(col): _*)
     val masked = interped
       // one row per region — broadcast by construction (granule-day contract)
@@ -268,29 +267,39 @@ object Pipeline {
   def sessionizePerGranule(granule: DataFrame, cfg: Config, granuleCol: String): DataFrame =
     Sessionize.globalizeRegionIds(sessionize(granule, cfg, Seq(granuleCol)), granuleCol)
 
+  /** The `process` prologue every mission shares: sessionize with the
+    * mission's `sessionize` — per granule when the input carries a
+    * `granule_path` column (as produced by the netcdf3 source / manifest
+    * reader: the shape that scales to a year of granules in one run) —
+    * apply its quality rule, and persist. Sessions feed three consumers
+    * (region summary, interpolation, mask), so the sessionization window
+    * chain runs once, not three times (the Spark analog of the reference's
+    * temp-store spill, SURVEY S11). The persist goes through
+    * [[graft.CacheScope.persist]]: batch callers get session-lifetime
+    * caches; long-lived loops bracket each batch in `CacheScope.withScope`
+    * (as `MicroBatchIngest.ingestQueue` does) so the cache footprint stays
+    * flat across micro-batches. */
+  private[domain] def qualitySessions(
+      granule: DataFrame,
+      cfg: Config,
+      sessionize: (DataFrame, Config, Seq[String]) => DataFrame,
+      quality: DataFrame => DataFrame): DataFrame = {
+    val sessionized =
+      if (granule.columns.contains("granule_path"))
+        Sessionize.globalizeRegionIds(sessionize(granule, cfg, Seq("granule_path")), "granule_path")
+      else sessionize(granule, cfg, Nil)
+    graft.CacheScope.persist(quality(sessionized), StorageLevel.MEMORY_AND_DISK)
+  }
+
   /** Full target-focused pipeline → sparse long form
-    * (target_id, time, lat_idx, lon_idx, lat, lon, variable, value).
-    * A `granule_path` column (as produced by the netcdf3 source / manifest
-    * reader) switches sessionization to per-granule windows — the shape
-    * that scales to a year of granules in one run. */
+    * (target_id, time, lat_idx, lon_idx, lat, lon, variable, value). */
   def process(
       granule: DataFrame,
       catalog: DataFrame,
       cfg: Config = Config(),
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty")): DataFrame = {
-    // sessions feed three consumers (region summary, interpolation, mask);
-    // persist so the sessionization window chain runs once, not three times
-    // (the Spark analog of the reference's temp-store spill, SURVEY S11)
-    val sessionized =
-      if (granule.columns.contains("granule_path"))
-        sessionizePerGranule(granule, cfg, "granule_path")
-      else sessionize(granule, cfg)
-    val sessions0 = qualityFilter(sessionized, cfg)
-    val sessions =
-      if (cfg.persistSessions)
-        graft.CacheScope.persist(sessions0, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sessions0
-    val regions = TargetCatalog.associate(regionSummary(sessions), catalog)
+    val sessions = qualitySessions(granule, cfg, sessionize, qualityFilter(_, cfg))
+    val regions  = TargetCatalog.associate(regionSummary(sessions), catalog)
     gridInterpMask(regions, sessions, cfg, valueCols)
   }
 }

@@ -84,17 +84,7 @@ object SifPipeline {
       cfg: Pipeline.Config = Pipeline.Config(samMode = 3, targetMode = 2)): DataFrame = {
     val withTime = soundings.withColumn("time", sifTime(col("delta_time")))
     val resolved = resolveTargets(withTime, sequences)
-    val sessionized =
-      if (resolved.columns.contains("granule_path"))
-        sessionizePerGranule(resolved, cfg, "granule_path")
-      else sessionize(resolved, cfg)
-    val sessions0 = qualityFilter(sessionized)
-    // three consumers (region summary + interp + mask) — persist so the
-    // sessionization window chain runs once, matching Pipeline.process
-    val sessions =
-      if (cfg.persistSessions)
-        graft.CacheScope.persist(sessions0, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sessions0
+    val sessions = Pipeline.qualitySessions(resolved, cfg, sessionize, qualityFilter)
     val regions  = TargetCatalog.associate(Pipeline.regionSummary(sessions), catalog)
     Pipeline.gridInterpMask(regions, sessions, cfg, Seq("daily_sif"))
   }

@@ -172,9 +172,4 @@ object Portable {
     * Oracle: strftime(ts, '%Y-%m-%d %H:%M:%S'). */
   def tsStr(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
-  /** Whole-second epoch difference b - a, matching DuckDB
-    * date_diff('second', a, b) (boundary count == floor-epoch delta for our
-    * positive, post-1970 data). */
-  def secondsBetween(a: Column, b: Column): Column =
-    unix_timestamp(b) - unix_timestamp(a)
 }

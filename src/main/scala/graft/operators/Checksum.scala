@@ -42,14 +42,4 @@ object Checksum {
           "").cast("binary")).as("checksum"))
   }
 
-  /** Per-block digests for hierarchical folding at scale. */
-  def blockChecksums(df: DataFrame, blockCol: Column, orderCol: String, rowHash: Column): DataFrame =
-    df.select(blockCol.as("block"), col(orderCol).as("_k"), rowHash.as("_h"))
-      .groupBy(col("block"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        md5(
-          array_join(
-            transform(array_sort(collect_list(struct(col("_k"), col("_h")))), x => x("_h")),
-            "").cast("binary")).as("checksum"))
 }

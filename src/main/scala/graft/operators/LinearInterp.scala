@@ -4,18 +4,21 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.functions.Delaunay
 
-/** Region-grouped linear (Delaunay/barycentric) scatter→grid interpolation —
-  * the reference's production method (`griddata(method='linear')`,
-  * SURVEY G3 / §2.10 kernel 1), with the reference's `< 4 points → nearest`
-  * fallback (`OCO3SamProcessor.py:150-159`; also used when the point set is
-  * degenerate, where scipy would raise).
+/** Region-grouped scatter→grid interpolation — the reference's
+  * `griddata` (SURVEY G3 / §2.10 kernel 1): `linear` (Delaunay/barycentric,
+  * the reference's deploy method), `cubic` (Bézier-triangle Hermite over
+  * the same triangulation) or `nearest`, with the reference's
+  * `< 4 points → nearest` fallback (`OCO3SamProcessor.py:150-159`; also
+  * used when the point set is degenerate, where scipy would raise).
   *
-  * Shape: a `cogroup` on region_id — pixels and soundings of one region
-  * meet in one task, the triangulation is built once per region and reused
-  * for every pixel and variable. Regions are SAM captures (O(10³)
-  * soundings, O(10⁵) pixels), so per-group state is small while regions
-  * scale out across executors; this is the typed-operator alternative to a
-  * custom physical node (SURVEY §4: promote only if fusion proves necessary).
+  * Shape: one serialized [[RegionKernel]] per region ([[buildKernels]] —
+  * the soundings shuffle by region once and the triangulation is built
+  * once), then a `cogroup` of pixels against kernel rows
+  * ([[interpolateKernels]]). Every pipeline interpolates through this one
+  * path. Regions are SAM captures (O(10³) soundings, O(10⁵) pixels), so
+  * per-group state is small while regions scale out across executors; a
+  * kernel row is bounded by its region's point count, so an oversized
+  * region split into tiles replicates the kernel, not the soundings.
   */
 object LinearInterp {
 
@@ -41,9 +44,7 @@ object LinearInterp {
       gx: Array[Array[Double]],   // cubic only: per-variable gradient x
       gy: Array[Array[Double]])
 
-  /** Kernel construction from one region's (sounding-index-sorted) points —
-    * the SAME arithmetic as the inline cogroup path, factored so the
-    * build-once/evaluate-per-tile split cannot drift from it. */
+  /** Kernel construction from one region's (sounding-index-sorted) points. */
   private def mkKernel(
       rid: Long, pts: Array[PointIn], nVars: Int, method: String): RegionKernel = {
     val xs     = pts.map(_.px)
@@ -128,11 +129,20 @@ object LinearInterp {
       .as[PixelIn]
   }
 
+  private val Methods: Seq[String] = Seq("nearest", "linear", "cubic")
+
   /** One serialized [[RegionKernel]] per region: shuffle the soundings by
     * region once, build the triangulation/gradients once. Bounded output —
-    * one row per region, sized by that region's point count. */
+    * one row per region, sized by that region's point count.
+    *
+    * soundings: (region_id, sounding_index, longitude, latitude,
+    * valueCols...). `method` ∈ nearest | linear | cubic; anything else
+    * (it comes from job YAML) fails here, naming the bad value. */
   def buildKernels(
       soundings: DataFrame, valueCols: Seq[String], method: String): Dataset[RegionKernel] = {
+    if (!Methods.contains(method))
+      throw new IllegalArgumentException(
+        s"unknown interpolation method '$method' (expected ${Methods.mkString(" | ")})")
     val spark = soundings.sparkSession
     import spark.implicits._
     pointsOf(soundings, valueCols)
@@ -146,8 +156,16 @@ object LinearInterp {
     * (a TILE surrogate when an oversized region was split: each tile
     * carries a replicated copy of its region's kernel, so per-tile results
     * are bit-identical to the unsplit region at one triangulation's build
-    * cost instead of one per tile). Output contract identical to
-    * [[interpolate]]. */
+    * cost instead of one per tile).
+    *
+    * pixels: (region_id, lon_idx, lat_idx, lon, lat, ...). Returns
+    * `(region_id, lon_idx, lat_idx, lon, lat, valueCols…)` — one row per
+    * pixel of a region that has a kernel (NaN outside the convex hull for
+    * linear/cubic; callers drop NaN rows in sparse form). The kernel emits
+    * the pixel coordinates itself, so the result is self-contained: extra
+    * pixel columns do NOT pass through (a join back to `pixels` would be
+    * pixel-sized on both sides); per-region constants belong in a
+    * region-level table the caller re-attaches (bounded by region count). */
   def interpolateKernels(
       pixels: DataFrame, kernels: Dataset[RegionKernel], valueCols: Seq[String]): DataFrame = {
     val spark = pixels.sparkSession
@@ -176,11 +194,18 @@ object LinearInterp {
     * LOWEST point index — identical to the linear scan's `strict <` over
     * ascending indices, which is what keeps the reference's
     * keep-first-sounding semantics. Uniform grid + outward Chebyshev-ring
-    * search: a cell at ring k holds points at distance ≥ (k−1)·min(cw,ch)
-    * from anywhere in the query's (clamped) cell, so the search stops as
-    * soon as that bound exceeds the best hit — O(1) expected per query
-    * versus the O(points) scan that made a degenerate 90k-point band
-    * region O(10¹⁰) under `method=nearest`. */
+    * search: a cell at ring k holds points at distance ≥ (k−1)·step from
+    * anywhere in the query's (clamped) cell, so the search stops as soon as
+    * that bound exceeds the best hit — O(1) expected per query versus the
+    * O(points) scan that made a degenerate 90k-point band region O(10¹⁰)
+    * under `method=nearest` — and in any case once the ring covers the
+    * whole grid.
+    *
+    * A zero-extent axis (one point, all duplicates, points on one
+    * meridian or parallel) gets a single cell: a zero cell width would make
+    * the ring bound 0 forever, and the search would only end when the ring
+    * counter overflowed. The step of the bound is the smallest cell width
+    * over the axes that have extent. */
   private final class PointGrid(xs: Array[Double], ys: Array[Double]) {
     private val n = xs.length
     private var minX = Double.MaxValue; private var minY = Double.MaxValue
@@ -194,27 +219,33 @@ object LinearInterp {
       }
     }
     private val side = math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
-    private val cw   = math.max((maxX - minX) / side, 1e-300)
-    private val ch   = math.max((maxY - minY) / side, 1e-300)
-    private val minStep = math.min(cw, ch)
+    private val flatX = !(maxX > minX)
+    private val flatY = !(maxY > minY)
+    // cells per axis: side×side, or ~n cells along the one axis with extent
+    private val nx = if (flatX) 1 else if (flatY) side * side else side
+    private val ny = if (flatY) 1 else if (flatX) side * side else side
+    private val cw = math.max((maxX - minX) / nx, 1e-300)
+    private val ch = math.max((maxY - minY) / ny, 1e-300)
+    private val minStep =
+      if (flatX) ch else if (flatY) cw else math.min(cw, ch)
     private val cells: Array[Array[Int]] = {
-      val bufs = Array.fill(side * side)(new scala.collection.mutable.ArrayBuffer[Int](2))
+      val bufs = Array.fill(nx * ny)(new scala.collection.mutable.ArrayBuffer[Int](2))
       var i = 0
       while (i < n) { // ascending index order per cell — tie-break preserved
-        bufs(cellOf(ys(i), minY, ch) * side + cellOf(xs(i), minX, cw)) += i
+        bufs(cellOf(ys(i), minY, ch, ny) * nx + cellOf(xs(i), minX, cw, nx)) += i
         i += 1
       }
       bufs.map(_.toArray)
     }
-    @inline private def cellOf(v: Double, lo: Double, w: Double): Int =
-      math.min(side - 1, math.max(0, ((v - lo) / w).toInt))
+    @inline private def cellOf(v: Double, lo: Double, w: Double, cnt: Int): Int =
+      math.min(cnt - 1, math.max(0, ((v - lo) / w).toInt))
 
     def nearest(qx: Double, qy: Double): Int = {
-      val cx = cellOf(qx, minX, cw)
-      val cy = cellOf(qy, minY, ch)
+      val cx = cellOf(qx, minX, cw, nx)
+      val cy = cellOf(qy, minY, ch, ny)
       var bestI = -1; var bestD = Double.MaxValue
       @inline def scanCell(gx: Int, gy: Int): Unit = {
-        val cell = cells(gy * side + gx)
+        val cell = cells(gy * nx + gx)
         var j = 0
         while (j < cell.length) {
           val i  = cell(j)
@@ -229,73 +260,29 @@ object LinearInterp {
       while (!done) {
         // the whole Chebyshev ring r (clipped to the grid)
         val x0 = cx - r; val x1 = cx + r; val y0 = cy - r; val y1 = cy + r
-        if (x0 >= side || x1 < 0 || y0 >= side || y1 < 0) done = true
-        else {
-          var gx = math.max(0, x0)
-          while (gx <= math.min(side - 1, x1)) {
-            if (y0 >= 0) scanCell(gx, y0)
-            if (r > 0 && y1 < side) scanCell(gx, y1)
-            gx += 1
-          }
-          if (r > 0) {
-            var gy = math.max(0, y0 + 1)
-            while (gy <= math.min(side - 1, y1 - 1)) {
-              if (x0 >= 0) scanCell(x0, gy)
-              if (x1 < side) scanCell(x1, gy)
-              gy += 1
-            }
-          }
-          if (bestI >= 0) {
-            val lb = r.toDouble * minStep // ring r+1 points are ≥ r·minStep away
-            if (lb * lb > bestD) done = true
-          }
-          r += 1
+        var gx = math.max(0, x0)
+        while (gx <= math.min(nx - 1, x1)) {
+          if (y0 >= 0) scanCell(gx, y0)
+          if (r > 0 && y1 < ny) scanCell(gx, y1)
+          gx += 1
         }
+        if (r > 0) {
+          var gy = math.max(0, y0 + 1)
+          while (gy <= math.min(ny - 1, y1 - 1)) {
+            if (x0 >= 0) scanCell(x0, gy)
+            if (x1 < nx) scanCell(x1, gy)
+            gy += 1
+          }
+        }
+        // every cell scanned once the ring covers the grid
+        if (x0 <= 0 && x1 >= nx - 1 && y0 <= 0 && y1 >= ny - 1) done = true
+        else if (bestI >= 0) {
+          val lb = r.toDouble * minStep // ring r+1 points are ≥ r·minStep away
+          if (lb * lb > bestD) done = true
+        }
+        r += 1
       }
       bestI
     }
-  }
-
-  /** pixels: (region_id, lon_idx, lat_idx, lon, lat, ...); soundings:
-    * (region_id, sounding_index, longitude, latitude, valueCols...).
-    * Returns `(region_id, lon_idx, lat_idx, lon, lat, valueCols…)` — one
-    * row per pixel of a region that has soundings (NaN outside the convex
-    * hull for linear/cubic; callers drop NaN rows in sparse form). Extra
-    * pixel columns do NOT pass through: per-region constants belong in a
-    * region-level table the caller re-attaches (bounded by region count).
-    *
-    * `method` ∈ nearest | linear | cubic. The kernel form of `nearest`
-    * (first-minimum scan per pixel, ties to lowest sounding_index) exists
-    * because the rank-1-window join materializes |pixels|×|soundings| rows
-    * per region — at 10⁶ soundings that product OOMs where this cogroup
-    * streams pixels against one in-memory point array per region. */
-  def interpolate(
-      pixels: DataFrame,
-      soundings: DataFrame,
-      valueCols: Seq[String],
-      method: String = "linear"): DataFrame = {
-    val spark = pixels.sparkSession
-    import spark.implicits._
-    val out = pixelsOf(pixels)
-      .groupByKey(_.region_id)
-      .cogroup(pointsOf(soundings, valueCols).groupByKey(_.region_id)) { (rid, pit, sit) =>
-        val pts = sit.toArray.sortBy(_.sounding_index)
-        if (pts.isEmpty) Iterator.empty
-        else {
-          // same build + eval code as the serialized-kernel path — the two
-          // forms cannot drift
-          val ev = new KernelEval(mkKernel(rid, pts, valueCols.length, method))
-          pit.map(p =>
-            PixelOut(p.region_id, p.lon_idx, p.lat_idx, p.lon, p.lat, ev.eval(p.lon, p.lat)))
-        }
-      }
-    // the kernel emits the pixel coordinates itself, so the result is
-    // self-contained: NO join back to `pixels` (that join was pixel-sized
-    // on BOTH sides — at the 36000×18000 deploy mesh it re-shuffled the
-    // whole covered-pixel set a second time for columns the cogroup
-    // already held). Per-region constants (time / target / mode) are the
-    // caller's to re-attach from the region-level table, which is bounded
-    // by the region count, not the pixel count.
-    expand(out.toDF(), valueCols)
   }
 }

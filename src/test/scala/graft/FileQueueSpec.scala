@@ -108,7 +108,7 @@ class FileQueueSpec extends SparkSpec {
         spark, queue.toString, ckpt, store, catalog)
       q.awaitTermination()
     }
-    // persistSessions caches must be batch-scoped (CacheScope in the
+    // persisted pipeline sessions must be batch-scoped (CacheScope in the
     // foreachBatch wrapper): the cache footprint after draining N batches
     // equals the footprint before — no per-micro-batch accretion
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.domain.{Pipeline, TargetCatalog}
+import graft.operators.LinearInterp
 import graft.domain.TargetCatalog.Target
 import graft.sources.SyntheticGranule
 import graft.sources.SyntheticGranule.sounding
@@ -109,7 +110,8 @@ class PipelineSpec extends SparkSpec {
       (1L, 0L, 10.0, 40.0, 400.0),
       (1L, 1L, 10.6, 40.1, 401.0)
     ).toDF("region_id", "sounding_index", "longitude", "latitude", "xco2")
-    val out = graft.operators.LinearInterp.interpolate(pixels, soundings, Seq("xco2"), "nearest")
+    val out = LinearInterp.interpolateKernels(
+      pixels, LinearInterp.buildKernels(soundings, Seq("xco2"), "nearest"), Seq("xco2"))
     assert(out.columns.toSeq === Seq("region_id", "lon_idx", "lat_idx", "lon", "lat", "xco2"))
     val got = out.collect().map(r =>
       (r.getAs[Int]("lon_idx"), r.getAs[Int]("lat_idx")) ->
@@ -162,24 +164,26 @@ class PipelineSpec extends SparkSpec {
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.select("lon_idx", "lat_idx", "xco2").collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    val kernel = keyed(graft.operators.LinearInterp.interpolate(pixels, pts, Seq("xco2"), "nearest"))
+    val kernel = keyed(LinearInterp.interpolateKernels(
+      pixels, LinearInterp.buildKernels(pts, Seq("xco2"), "nearest"), Seq("xco2")))
     val join   = keyed(graft.domain.Pipeline.interpolateNearest(pixels, pts, Seq("xco2")))
     assert(kernel.size === 400)
     assert(kernel === join)
   }
 
-  test("serialized region kernels evaluate bit-identically to the inline cogroup (all methods)") {
+  test("kernel path per method against the nearest join and a planar field") {
     import spark.implicits._
-    // the triangulate-once-per-region path (buildKernels →
-    // interpolateKernels, what GlobalPipeline shares across an oversized
-    // region's tiles) must reproduce LinearInterp.interpolate exactly —
-    // the kernel survives an encoder round-trip (Tungsten serialization),
-    // so every double must come back bit-identical. Two regions: a real
-    // triangulation (12 pts, 2 variables) and a 3-point nearest-fallback.
+    // the one interpolation path (buildKernels → interpolateKernels; the
+    // kernel row survives an encoder round-trip) checked per method against
+    // independent references. Region 1: 12 scattered points carrying a
+    // planar field (xco2) and a constant (xco2_uncertainty). Region 2: a
+    // 3-point region, below the 4-point triangulation minimum, so every
+    // method falls back to nearest there.
     val rng = new scala.util.Random(5)
-    val pts = ((0 until 12).map { i =>
-      (1L, i.toLong, 10.0 + rng.nextDouble() * 2, 40.0 + rng.nextDouble() * 2,
-        400.0 + rng.nextDouble() * 10, 0.1 + rng.nextDouble())
+    def plane(x: Double, y: Double) = 400.0 + 2.0 * x - 3.0 * y
+    val xy  = Array.fill(12)((10.0 + rng.nextDouble() * 2, 40.0 + rng.nextDouble() * 2))
+    val pts = (xy.toSeq.zipWithIndex.map { case ((x, y), i) =>
+      (1L, i.toLong, x, y, plane(x, y), 0.5)
     } ++ (0 until 3).map { i =>
       (2L, i.toLong, -5.0 + i * 0.3, -45.0 + i * 0.2, 500.0 + i, 0.5)
     }).toDF("region_id", "sounding_index", "longitude", "latitude", "xco2", "xco2_uncertainty")
@@ -189,17 +193,49 @@ class PipelineSpec extends SparkSpec {
       (2L, k, 0, -5.2 + k * 0.06, -44.9)
     }).toDF("region_id", "lon_idx", "lat_idx", "lon", "lat")
     val cols = Seq("xco2", "xco2_uncertainty")
-    def bits(df: org.apache.spark.sql.DataFrame) =
+    type Key = (Long, Int, Int)
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Key, (Double, Double, Seq[Double])] =
       df.collect().map { r =>
         (r.getAs[Long]("region_id"), r.getAs[Int]("lon_idx"), r.getAs[Int]("lat_idx")) ->
-          cols.map(c => java.lang.Double.doubleToLongBits(r.getAs[Double](c)))
+          ((r.getAs[Double]("lon"), r.getAs[Double]("lat"), cols.map(c => r.getAs[Double](c))))
       }.toMap
+    val reference = rows(Pipeline.interpolateNearest(pixels, pts, cols))
+    // hull membership from the same triangulation the kernel builds
+    val hull = graft.functions.Delaunay.triangulate(xy.map(_._1), xy.map(_._2)).get
+    val ones = Array.fill(hull.px.length)(1.0)
+    def inHull(x: Double, y: Double) =
+      !graft.functions.Delaunay.interpolateLinear(hull, ones, x, y).isNaN
     Seq("nearest", "linear", "cubic").foreach { m =>
-      val inline = bits(graft.operators.LinearInterp.interpolate(pixels, pts, cols, m))
-      val shared = bits(graft.operators.LinearInterp.interpolateKernels(
-        pixels, graft.operators.LinearInterp.buildKernels(pts, cols, m), cols))
-      assert(inline.nonEmpty)
-      assert(shared === inline, s"method=$m")
+      val got = rows(LinearInterp.interpolateKernels(
+        pixels, LinearInterp.buildKernels(pts, cols, m), cols))
+      assert(got.keySet === reference.keySet, s"method=$m")
+      val (tri, fallback) = got.partition(_._1._1 == 1L)
+      // the 3-point region is the nearest fallback under every method
+      assert(fallback === reference.filter(_._1._1 == 2L), s"method=$m")
+      if (m == "nearest") assert(tri === reference.filter(_._1._1 == 1L))
+      else {
+        val inside = tri.filter { case (_, (x, y, _)) => inHull(x, y) }
+        assert(inside.nonEmpty && inside.size < tri.size, "the pixel grid must straddle the hull")
+        tri.foreach { case (k, (x, y, Seq(v, u))) =>
+          if (inside.contains(k)) {
+            assert(math.abs(v - plane(x, y)) < 1e-9, s"method=$m pixel=$k")
+            assert(math.abs(u - 0.5) < 1e-12, s"method=$m pixel=$k")
+          } else assert(v.isNaN && u.isNaN, s"method=$m pixel=$k outside the hull")
+        }
+      }
+    }
+  }
+
+  test("an unknown grid.method fails in every pipeline, naming the value") {
+    Seq("lineer", "nearest_join").foreach { m =>
+      val cfg = Pipeline.Config(gridN = 8, method = m)
+      val runs: Seq[() => Any] = Seq(
+        () => Pipeline.process(granule, catalog, cfg).count(),
+        () => graft.domain.GlobalPipeline.process(granule, cfg = cfg).count())
+      runs.foreach { run =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(s"'$m'"), e.getMessage)
+      }
     }
   }
 }
